@@ -964,9 +964,9 @@ def run_suite(
         )
 
     # ---- 4. sha256 row invariant (digest precomputed in enriched) --------
-    # Engine-key path is THREE-PHASE (round-5 shuffle audits,
-    # tools/profile_shuffles.py + the event-log pass recorded in
-    # BENCH/SCALING_ANALYSIS.md):
+    # Engine-key path is THREE-PHASE (round-5 event-log shuffle audits,
+    # recorded in BENCH/SCALING_ANALYSIS.md; ``perfbench/run.py --trace
+    # 1`` reports the same per-stage shuffle bytes today):
     #
     # * Phase 0 — order-independent checksum, NO SHUFFLE AT ALL: each
     #   side reduces map-side to (row count, two independent
@@ -1156,28 +1156,29 @@ def run_suite(
     # synchronous universe collect has already materialized above).
     # The overlapped partition-universe collect (background thread,
     # staged path) runs concurrently and is resolved only afterwards.
+    from concurrent.futures import ThreadPoolExecutor as _TPE
+
+    def _prime_count(item):
+        i, frame = item
+        _p0 = time.perf_counter()
+        n = int(frame.count())
+        if os.environ.get("PYNOMALY_SUITE_TIMINGS"):
+            print(
+                f"[suite-timing]   primer frame {i}: "
+                f"{time.perf_counter() - _p0:.2f}s (start "
+                f"{_p0 - _t0:.2f}s, rows {n})",
+                file=sys.stderr,
+            )
+        return str(i), n
+
     _frame_counts: dict = {}
     if _persisted:
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        def _prime_count(item):
-            i, frame = item
-            _p0 = time.perf_counter()
-            n = int(frame.count())
-            if os.environ.get("PYNOMALY_SUITE_TIMINGS"):
-                print(
-                    f"[suite-timing]   primer frame {i}: "
-                    f"{time.perf_counter() - _p0:.2f}s (start "
-                    f"{_p0 - _t0:.2f}s, rows {n})",
-                    file=sys.stderr,
-                )
-            return str(i), n
-
         with _TPE(max_workers=min(8, len(_persisted))) as _pool:
             _frame_counts = dict(
                 _pool.map(_prime_count, list(enumerate(_persisted)))
             )
     _mark("mid-frame cache primer (job 1)")
+    _n_job1 = len(_persisted)
 
     # ---- deferred uniqueness: decide broadcast, build + prime dup groups --
     _pending_uniq: List = []
@@ -1193,7 +1194,7 @@ def run_suite(
             .where(F.col("_cnt") > 1)
         ).persist()
         _persisted.append(dup_groups)
-        _pending_uniq.append((chk, keys, dup_groups))
+        _pending_uniq.append((chk, keys, dup_groups, len(_persisted) - 1))
 
     # ---- drift violator subsets (built now, counted with job 2) -----------
     # materialize the violator subset off the hot keyed cache: the count
@@ -1210,26 +1211,19 @@ def run_suite(
             F.col("loop_score").alias(f"_d{j}_score"),
         ).persist()
         _persisted.append(violators)
-        _pending_drift.append((j, chk, violators))
+        _pending_drift.append((j, chk, violators, len(_persisted) - 1))
 
     # job 2: small CONCURRENT counts — dup groups probe the (cached)
     # candidate set only, violator subsets probe the (cached) drift
     # scores; the frames are independent, so the driver syncs once on
     # the slowest instead of once per frame (same §2.6 overlap as the
     # primer).  Each count also sizes its fused join-back's bounded
-    # broadcast.
-    _job2 = [f for _, _, f in _pending_uniq] + [
-        f for _, _, f in _pending_drift
-    ]
-    _job2_counts: dict = {}
+    # broadcast.  Counts join job 1's, keyed by position in _persisted.
+    _job2 = list(enumerate(_persisted))[_n_job1:]
     if _job2:
-        from concurrent.futures import ThreadPoolExecutor as _TPE2
-
-        with _TPE2(max_workers=min(8, len(_job2))) as _pool2:
-            _job2_counts = dict(
-                _pool2.map(lambda f: (id(f), int(f.count())), _job2)
-            )
-    for chk, keys, dup_groups in _pending_uniq:
+        with _TPE(max_workers=min(8, len(_job2))) as _pool2:
+            _frame_counts.update(_pool2.map(_prime_count, _job2))
+    for chk, keys, dup_groups, pos in _pending_uniq:
         metric_frames.append(
             _count_metric(
                 dup_groups.groupBy("partition_id").agg(
@@ -1239,7 +1233,7 @@ def run_suite(
                 "duplicate_rows",
             )
         )
-        _fused_uniq.append((chk, dup_groups, _job2_counts[id(dup_groups)]))
+        _fused_uniq.append((chk, dup_groups, _frame_counts[str(pos)]))
     if _deferred_uniq or _pending_drift:
         _mark("dup-group/violator primer (job 2)")
 
@@ -1380,11 +1374,11 @@ def run_suite(
                     F.lit(None).cast("double"),
                 )
             )
-        for j, chk, violators in _pending_drift:
+        for j, chk, violators, pos in _pending_drift:
             marker = f"_d{j}_score"
             # violators built + counted with job 2 above (hot keyed
             # cache); the count sizes the bounded broadcast here
-            n_viol = _job2_counts[id(violators)]
+            n_viol = _frame_counts[str(pos)]
             cond = (F.col("partition_id") == F.col(f"_d{j}_pid")) & (
                 F.col("row_id") == F.col(f"_d{j}_rid")
             )

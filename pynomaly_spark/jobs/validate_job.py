@@ -24,6 +24,33 @@ import sys
 import time
 
 
+def build_session():
+    """The job's SparkSession, master and resources as spark-submit set them.
+
+    The one engine default applied here is the generated-code cache size
+    (see :mod:`pynomaly_spark.session`): the warm-up pass primes codegen,
+    and Spark's default 100-entry cache would evict those classes before
+    the measured pass.  A ``--conf`` for the key given to spark-submit
+    wins.
+    """
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+    from pyspark import SparkConf, SparkContext
+    from pyspark.sql import SparkSession
+
+    from pynomaly_spark.session import _ENGINE_CONF
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    # attach to (or launch) the JVM first, so SparkConf() loads the
+    # spark-submit --conf values it holds as system properties
+    SparkContext._ensure_initialized()
+    builder = SparkSession.builder
+    if not SparkConf().contains(key):
+        builder = builder.config(key, _ENGINE_CONF[key])
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def main(argv=None) -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="dir with files.parquet [+ commits/sha_oracle]")
@@ -51,9 +78,7 @@ def main(argv=None) -> None:
     args = p.parse_args(argv)
 
     # import after arg parsing so --help is instant under spark-submit
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-    from pyspark.sql import SparkSession
-
+    spark = build_session()
     from pynomaly_spark.checks import (
         Cardinality,
         CheckSuite,
@@ -65,9 +90,6 @@ def main(argv=None) -> None:
         Uniqueness,
         run_suite,
     )
-
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     stage_dir = args.stage_dir
     if stage_dir == "auto":
