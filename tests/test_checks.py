@@ -160,6 +160,127 @@ def test_sha_invariant_two_phase_exactness(spark, code_tables):
     assert row.value.sum() == 2 and not row[row.value > 0].passed.any()
 
 
+@pytest.mark.parametrize("tampered", [False, True])
+def test_permuted_keys_match_engine_keys(spark, code_tables, tampered):
+    """A key tuple is one rule whatever its order: Uniqueness and
+    RowInvariant over (commit, path, repo) report the same metric values
+    and violation row ids as over the engine keys (repo, path, commit),
+    on the planted table and on a sha-corrupted copy of it."""
+    files, commits, oracle, expected = code_tables
+    if tampered:
+        files = files.withColumn(
+            "content",
+            F.when(
+                F.col("path") == "src/orphan/file_0.py", F.lit("TAMPERED")
+            ).otherwise(F.col("content")),
+        )
+
+    def outputs(keys):
+        res = run_suite(
+            files,
+            CheckSuite(
+                checks=[Uniqueness(keys=keys), RowInvariant(join_keys=keys)]
+            ),
+            sha_oracle=oracle,
+        )
+        m = sorted(
+            (r.partition_id, r.metric, r.value, r.passed)
+            for r in res.metrics.collect()
+        )
+        v = sorted(
+            (r.partition_id, r.check_name.split("(")[0], r.row_id)
+            for r in res.violations.collect()
+        )
+        res.unpersist()
+        return m, v
+
+    m, v = outputs(("repo", "path", "commit"))
+    assert outputs(("commit", "path", "repo")) == (m, v)
+    n_sha = sum(1 for _, check, _ in v if check == "sha256_invariant")
+    assert n_sha == (1 if tampered else 0)
+    assert len(v) - n_sha == expected["dup_key_rows"]
+
+
+def _next_job_id(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _measured_suite(spark, suite, code_tables, stage_dir):
+    """(run_suite jobs, unified().collect() jobs, Exchange nodes in the
+    pre-execution plan of unified(), rows), measured after a warm run."""
+    files, commits, oracle, _ = code_tables
+    for _ in range(2):
+        j0 = _next_job_id(spark)
+        res = run_suite(
+            files, suite, commits=commits, sha_oracle=oracle,
+            stage_dir=stage_dir,
+        )
+        j1 = _next_job_id(spark)
+        unified = res.unified()
+        plan = unified._jdf.queryExecution().executedPlan().toString()
+        rows = unified.collect()
+        j2 = _next_job_id(spark)
+        res.unpersist()
+    return j1 - j0, j2 - j1, plan.count("Exchange"), rows
+
+
+def _row_key(r):
+    return tuple(
+        "" if r[c] is None else str(r[c])
+        for c in ("kind", "partition_id", "check_name", "metric", "row_id")
+    )
+
+
+@pytest.mark.parametrize(
+    "extra, budgets",
+    [
+        ((), {None: (33, 10, 47, 175), "staged": (32, 10, 47, 175)}),
+        (
+            ("psi", "fd", "p_chart"),
+            {None: (33, 23, 60, 196), "staged": (32, 23, 60, 196)},
+        ),
+    ],
+)
+def test_suite_job_and_exchange_budget(
+    spark, code_tables, tmp_path, extra, budgets
+):
+    """The benchmark's suite (default + RowInvariant), alone and with the
+    opt-in metric checks, persisted and staged: Spark jobs launched by
+    run_suite and by collecting unified(), and Exchange nodes in
+    unified()'s plan, stay within the measured budget; the output rows
+    are the same in both modes (drift scores to 1e-12: the two modes
+    feed the kernel from different relations)."""
+    from pynomaly_spark.checks import (
+        FunctionalDependency,
+        ProportionControl,
+        PsiDrift,
+    )
+
+    opt_in = {
+        "psi": PsiDrift(),
+        "fd": FunctionalDependency(),
+        "p_chart": ProportionControl(),
+    }
+    suite = CheckSuite.default()
+    suite.checks += [RowInvariant(), *[opt_in[c] for c in extra]]
+    outputs = {}
+    for mode, (jobs, collect_jobs, exchanges, n_rows) in budgets.items():
+        stage_dir = str(tmp_path / "stage") if mode else None
+        got = _measured_suite(spark, suite, code_tables, stage_dir)
+        assert got[0] <= jobs and got[1] <= collect_jobs, (mode, got[:3])
+        assert got[2] <= exchanges, (mode, got[:3])
+        assert len(got[3]) == n_rows, mode
+        outputs[mode] = sorted(got[3], key=_row_key)
+    persisted, staged = outputs.values()
+    for a, b in zip(persisted, staged):
+        da, db = a.asDict(), b.asDict()
+        sa, sb = da.pop("loop_score"), db.pop("loop_score")
+        assert da == db
+        assert (sa is None) == (sb is None)
+        if sa is not None:
+            assert abs(sa - sb) <= 1e-12
+
+
 def test_drift_flags_shifted_partition(result):
     metrics, violations, expected = result
     dr = metrics[
@@ -353,24 +474,33 @@ def _dup_table(spark, n):
     )
 
 
-def test_dup_candidate_join_not_broadcast_over_bound(spark):
+def _cand_rows(df, persisted):
+    """The uniqueness candidate phase as ``Uniqueness.plan`` runs it:
+    persisted candidate hashes, counted, then the bounded semi-join."""
+    from pynomaly_spark.checks import _cand_semi_join, _dup_candidate_hashes
+
+    cand_hashes = _dup_candidate_hashes(df).persist()
+    persisted.append(cand_hashes)
+    return _cand_semi_join(df, cand_hashes, cand_hashes.count())
+
+
+def test_dup_candidate_join_not_broadcast_over_bound(spark, monkeypatch):
     """Round-3 judge item 2: the uniqueness candidate semi-join must not
     UNCONDITIONALLY broadcast.  On an LLM-scale corpus duplicate keys
     are pervasive, so the candidate set is ~the whole table; the old
     hint would OOM every executor.  With a candidate set over the bound
     (and AQE's own conversion disabled so the test sees the engine's
     decision), the executed plan must contain no BroadcastExchange."""
-    from pynomaly_spark.checks import _hash_dup_candidates
+    from pynomaly_spark import checks
 
     n = 100_000
     df = _dup_table(spark, n)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(checks, "_BROADCAST_ROWS_MAX", 10_000)
     caches = []
     try:
-        cand = _hash_dup_candidates(
-            df, persisted_out=caches, broadcast_rows_max=10_000
-        )
+        cand = _cand_rows(df, caches)
         assert cand.count() == n
         plan = cand._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, plan
@@ -384,12 +514,10 @@ def test_dup_candidate_small_set_keeps_broadcast_fast_path(spark):
     """A candidate set under the bound takes the explicit broadcast —
     map-only probe, no exchange of the input side (the measured fast
     path for clean corpora)."""
-    from pynomaly_spark.checks import _hash_dup_candidates
-
     df = _dup_table(spark, 10_000)
     caches = []
     try:
-        cand = _hash_dup_candidates(df, persisted_out=caches)
+        cand = _cand_rows(df, caches)
         assert cand.count() == 10_000
         plan = cand._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" in plan, plan
